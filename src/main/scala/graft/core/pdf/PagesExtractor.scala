@@ -14,7 +14,7 @@ import scala.collection.mutable.{ArrayBuffer, Map => MMap, Set => MSet}
   * a real slot (only possible with high-bit bytes — printable 2-char pairs
   * are collision-free since |c1-c1'| < 113) EXECUTE that handler, e.g.
   * "U\xB9" runs T* and "C\xD8" runs the BI..EI skip. Differential-fuzzed
-  * vs the reference binary (FuzzR2 garbage-token family).
+  * vs the reference binary (FuzzSweep garbageTokens family).
   */
 object PagesExtractor {
   private val ops = Seq("\"", "'", "BT", "Do", "ET", "Q", "T*", "TD", "TJ",

@@ -100,8 +100,9 @@ private[graft] object Checkpoints {
   /** read an [[org.apache.spark.sql.Observation]] fired by an already-run
     * eager job (a `cut`/`eager` materialization), with a bounded wait and
     * a recompute fallback if metric delivery ever fails — the
-    * connectedComponents pattern (probed by graft.tools.ObsProbe),
-    * defined ONCE so every fused-scalar loop degrades identically. */
+    * connectedComponents pattern (OpsSpec's "an Observation below either
+    * eager cut fires" test pins that the metric fires), defined ONCE so
+    * every fused-scalar loop degrades identically. */
   private[graft] def observed(obs: org.apache.spark.sql.Observation)(
       fallback: => org.apache.spark.sql.Row): org.apache.spark.sql.Row = {
     import scala.concurrent.Await

@@ -584,17 +584,6 @@ object Dedup {
     * perturb `common` by 1 — probability ~(grams^2)/2^64, negligible at
     * any realistic vocabulary; the LSH+verify path (ngramJaccardDups)
     * stays fully string-exact. */
-  /** PERSISTED hashed distinct-gram postings (doc_id, g) — the shared
-    * base of the exact set-similarity self-joins; the caller owns the
-    * unpersist (the Checkpoints.eager release discipline). */
-  /** profiling-only alias (graft.tools.PrefixProf) */
-  private[graft] def gramPostingsForProf(documents: DataFrame): DataFrame =
-    gramPostings(documents)
-
-  private def gramPostings(documents: DataFrame): DataFrame =
-    gramPostingsWithSize(documents).select(col("doc_id"), col("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
   /** UNPERSISTED hashed distinct-gram postings carrying each doc's
     * uncapped distinct-gram-set size on every row: (doc_id, g, sz).
     * Carrying sz in the scan kernel is what lets the capped pair core

@@ -3003,6 +3003,42 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("Checkpoints: an Observation below either eager cut fires without a recompute") {
+    // Checkpoints.observed reads loop scalars from the job that cuts the
+    // round; its recompute fallback only covers a Spark that stops firing
+    // the metric under localCheckpoint(eager) or persist ->
+    // checkpoint(eager) -> unpersist (Checkpoints.reliable). Re-run on a
+    // Spark upgrade.
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    def fired(obs: org.apache.spark.sql.Observation): Long =
+      Await.result(obs.future, 30.seconds).getAs[Long]("s")
+
+    val local = org.apache.spark.sql.Observation("obs_local_cut")
+    val cp = spark.range(1000).toDF("id").observe(local, sum(col("id")).as("s"))
+      .localCheckpoint(eager = true)
+    assert(fired(local) == 499500L)
+    assert(cp.count() == 1000L)
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-obs-ckpt").toFile
+    spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+    try {
+      val reliable = org.apache.spark.sql.Observation("obs_reliable_cut")
+      val cached = spark.range(2000).toDF("id").observe(reliable, sum(col("id")).as("s"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cp2 = cached.checkpoint(eager = true)
+      cached.unpersist()
+      assert(fired(reliable) == 1999000L)
+      assert(cp2.count() == 2000L)
+    } finally {
+      spark.sparkContext.setCheckpointDir(null)
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
+      }
+      rm(dir)
+    }
+  }
+
   // ---- incremental dedup (shard vs snapshot) -------------------------------
 
   test("incrementalExactDedup: flags vs sequential recompute; bloom on/off identical") {
