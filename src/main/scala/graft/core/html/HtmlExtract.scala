@@ -11,7 +11,10 @@ import scala.collection.mutable.ArrayBuffer
   * via text-density and tag-heuristic scoring") and is fully deterministic
   * so the golden-diff harness applies:
   *
-  *  1. tokenize: tags / text / comments / raw-text elements (script, style);
+  *  1. scan: one pull [[Cursor]] yields text runs, open tags and close tags
+  *     (comments, doctype and raw-text elements skipped) — every surface of
+  *     this object ([[extract]], [[extractTables]], [[extractLinks]],
+  *     [[pageMeta]]) reads the page through it;
   *  2. build a block tree on block-level elements, tolerating unclosed tags;
   *  3. score each block: text density (chars per tag), link density, and a
   *     tag prior (article/main/p boosted; nav/header/footer/aside/form
@@ -24,11 +27,13 @@ object HtmlExtract {
   final case class Block(text: String, tagPath: String, score: Float)
   final case class Result(text: String, blocks: Vector[Block])
 
-  private val blockTags = Set(
+  /** block-level tags, each with its index into [[extract]]'s per-tag
+    * open-block counts */
+  private val blockTags: Map[String, Int] = Seq(
     "p", "div", "article", "section", "main", "li", "ul", "ol", "td", "th",
     "tr", "table", "h1", "h2", "h3", "h4", "h5", "h6", "blockquote", "pre",
     "header", "footer", "nav", "aside", "form", "body", "figcaption", "dd", "dt",
-    "figure")
+    "figure").zipWithIndex.toMap
 
   private val dropTags = Set("script", "style", "noscript", "template", "svg", "head", "iframe")
   private val rawTextTags = Set("script", "style", "noscript", "template")
@@ -80,7 +85,10 @@ object HtmlExtract {
   }
 
   private final class BlockAcc(
-      val tag: String, val depth: Int, val penalized: Boolean, val inTable: Boolean) {
+      val tag: String, val tagIdx: Int, val penalized: Boolean, enclosing: BlockAcc) {
+    /** nearest table among this block and its ancestors (null outside
+      * tables): kept per block so no close walks the open-element stack */
+    val table: BlockAcc = if (tag == "table") this else enclosing
     val text = new StringBuilder // DIRECT text only (prose scoring)
     // FULL subtree text — maintained only inside tables (bounded by table
     // content; avoids O(depth x chars) copying on deeply nested pages),
@@ -94,7 +102,6 @@ object HtmlExtract {
     // per-cell <div>/<p> wrappers counts zero cell link chars and the
     // majority-link guard never fires
     var fullLinkChars = 0
-    var ownBlock = false // has direct text (not only via child blocks)
     // table-composite state (allocated only for tag == "table"): cells AND
     // inner blocks are BUFFERED here instead of emitted, so the close of
     // the table can decide data-vs-layout with the full picture
@@ -112,14 +119,24 @@ object HtmlExtract {
       if (buffered == null) buffered = ArrayBuffer.empty[BufferedItem]
       buffered += item
     }
+    // only a block inside a table has a `full` a caller reads: elsewhere it
+    // is empty, and a table's own item feeds just the prose score
+    def item: BufferedItem = BufferedItem(normalizeWs(text.toString),
+      if (table == null || table == this) "" else normalizeWs(full.toString),
+      tag, tagCount, linkChars, penalized)
   }
 
-  /** a block closed inside a table, held until the table decides its fate:
-    * `text` is the block's DIRECT text (layout replay scores it exactly as
-    * round-3 prose), `fullText` its whole-subtree text (the data render) */
+  /** a closed block as the prose score reads it; inside a table it is held
+    * until the table decides its fate: `text` is the block's DIRECT text
+    * (a layout table replays it through the prose score), `fullText` its
+    * whole-subtree text (the data render) */
   private final case class BufferedItem(
       text: String, fullText: String, tag: String,
       tagCount: Int, linkChars: Int, penalized: Boolean)
+
+  /** share of `chars` that sits inside links, capped at 1 */
+  private def linkShare(linkChars: Int, chars: Int): Float =
+    if (chars == 0) 0f else math.min(1f, linkChars.toFloat / chars)
 
   /** data-table detection bounds: a table renders ROW-WISE (cells joined
     * by " | ", rows by '\n', one scored block for the whole table) when it
@@ -130,10 +147,10 @@ object HtmlExtract {
   final val MIN_DATA_CELLS = 4
   final val MAX_AVG_CELL_CHARS = 80f
 
-  sealed trait Tok
-  final case class TText(t: String) extends Tok
-  final case class TOpen(name: String, selfClosing: Boolean, hint: String = "") extends Tok
-  final case class TClose(name: String) extends Tok
+  /** the data-vs-layout gate of both table paths, over a table's non-empty
+    * cells, the rows holding at least one of them, and those cells' chars */
+  private def isDataTable(cells: Int, rows: Int, cellChars: Int): Boolean =
+    cells >= MIN_DATA_CELLS && rows >= 2 && cellChars.toFloat / cells <= MAX_AVG_CELL_CHARS
 
   /** index of ASCII-lowercase `needle` in `hay` from `from`, matching
     * hay ASCII-case-insensitively WITHOUT allocating a lowered copy. Two
@@ -212,17 +229,6 @@ object HtmlExtract {
     }
   }
 
-  /** trailing-slash self-closing test that does NOT misread an unquoted
-    * attribute value ending in '/' (`<a href=https://x.example/>` — per
-    * HTML5 the '/' is part of the value, the tag is open): self-closing
-    * only when the '/' directly follows the bare tag name, whitespace, or
-    * a closing quote. */
-  private[graft] def isSelfClosingInner(inner: String, name: String): Boolean =
-    inner.endsWith("/") && (inner.length == name.length + 1 || {
-      val b = inner.charAt(inner.length - 2)
-      b.isWhitespace || b == '"' || b == '\''
-    })
-
   /** lowercased `class` + `id` attribute values of a tag's attribute text
     * (minimal scan; only called when the tag body mentions class/id) */
   private[graft] def classIdHint(inner: String): String = {
@@ -250,111 +256,159 @@ object HtmlExtract {
   private[graft] def hintPenalized(hint: String): Boolean =
     hint.nonEmpty && unlikelyHint.matcher(hint).find() && !likelyHint.matcher(hint).find()
 
-  /** tolerant tokenizer: handles comments, doctype, raw-text elements,
-    * attribute quoting, unterminated tags */
-  def tokenize(html: String): Vector[Tok] = {
-    val out = Vector.newBuilder[Tok]
-    var i = 0
-    val n = html.length
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) {
-        if (i < n) out += TText(html.substring(i))
-        i = n
-      } else {
-        if (lt > i) out += TText(html.substring(i, lt))
-        if (lt + 1 >= n) i = n
-        else if (html.startsWith("<!--", lt)) {
-          val end = html.indexOf("-->", lt + 4)
-          i = if (end < 0) n else end + 3
-        } else if (html.charAt(lt + 1) == '!' || html.charAt(lt + 1) == '?') {
-          val end = html.indexOf('>', lt + 1)
-          i = if (end < 0) n else end + 1
-        } else if (html.charAt(lt + 1) == '/') {
-          val end = html.indexOf('>', lt + 2)
-          if (end < 0) i = n
-          else {
-            val name = html.substring(lt + 2, end).trim.toLowerCase(java.util.Locale.ROOT)
-            out += TClose(name.takeWhile(c => c.isLetterOrDigit))
-            i = end + 1
-          }
-        } else if (html.charAt(lt + 1).isLetter) {
-          // find tag end respecting quoted attributes
-          var j = lt + 1
-          var inQuote: Char = 0
-          var end = -1
-          while (j < n && end < 0) {
-            val c = html.charAt(j)
-            if (inQuote != 0) { if (c == inQuote) inQuote = 0 }
-            else if (c == '"' || c == '\'') inQuote = c
-            else if (c == '>') end = j
-            j += 1
-          }
-          if (end < 0) i = n
-          else {
-            val inner = html.substring(lt + 1, end)
-            val name = inner.takeWhile(c => c.isLetterOrDigit).toLowerCase(java.util.Locale.ROOT)
-            val selfClosing = isSelfClosingInner(inner, name) || voidTags.contains(name)
-            out += TOpen(name, selfClosing,
-              if (blockTags.contains(name)) classIdHint(inner.drop(name.length)) else "")
-            i = end + 1
-            // raw-text elements: skip to the matching close tag verbatim
-            if (!selfClosing && rawTextTags.contains(name)) {
-              val closeIdx = indexOfAsciiLower(html, s"</$name", i)
-              if (closeIdx < 0) i = n
-              else {
-                val gt = html.indexOf('>', closeIdx)
-                out += TClose(name)
-                i = if (gt < 0) n else gt + 1
-              }
-            }
-          }
-        } else {
-          out += TText("<")
-          i = lt + 1
-        }
-      }
-    }
-    out.result()
-  }
-
   private val voidTags = Set("br", "hr", "img", "input", "meta", "link", "area",
     "base", "col", "embed", "source", "track", "wbr")
+
+  // what a Cursor stands on after next()
+  private final val TEXT = 0
+  private final val OPEN = 1
+  private final val CLOSE = 2
+
+  /** The one tag scanner of this object: a pull cursor over a page that
+    * stands, after each [[next]], on a text run, an open tag or a close
+    * tag. It owns every tolerance rule once:
+    *
+    *  - comments, doctype and processing instructions yield nothing; an
+    *    unterminated one, like an unterminated tag, ends the page;
+    *  - a tag ends at the first '>' outside a quoted attribute value;
+    *  - a '<' that starts no tag is a one-char text run (a '<' at EOF is
+    *    dropped);
+    *  - open-tag names are the letter/digit run after '<', lowercased;
+    *    close-tag names the letter/digit run of the lowercased, trimmed
+    *    text between "</" and '>';
+    *  - an open tag is self-closing when it is void or its trailing '/'
+    *    directly follows the bare name, whitespace or a closing quote (so
+    *    `<a href=https://x.example/>` stays open — per HTML5 that '/' is
+    *    part of the value);
+    *  - raw-text elements (script/style/noscript/template) are skipped
+    *    verbatim to their `</name` (ASCII-case-insensitive): the next step
+    *    stands on a close tag of the same name, or ends the page when the
+    *    end tag is missing. [[skipRaw]] applies the same skip to any
+    *    element on request (pageMeta's rcdata `<title>`).
+    *
+    * Strings are built only when asked for: [[text]], [[attrs]] and a
+    * close tag's [[name]] are read off the page on demand. */
+  private final class Cursor(html: String) {
+    private val n = html.length
+    private var pos = 0
+    private var raw = false // the open tag just yielded is a raw-text element
+    private var nm: String = null
+    private var nextLt = -1 // the '<' that ended the last text run: no rescan
+    var kind = TEXT
+    var start = 0 // text: first char; tag: its '<'; after skipRaw: the raw text
+    var end = 0 // text: one past its last char; tag: its '>'
+    var selfClosing = false // open tags only
+
+    def text: String = html.substring(start, end)
+
+    /** an open tag's text after its name, cut at the LOWERED name's
+      * length (a name with 'İ', which lowers to two chars, loses one more
+      * char) — the cut all four surfaces read attributes from */
+    def attrs: String = html.substring(math.min(start + 1 + nm.length, end), end)
+
+    def name: String = {
+      if (nm == null) nm = closeName()
+      nm
+    }
+
+    /** steps to the next text run or tag; false at the end of the page */
+    def next(): Boolean = {
+      if (raw && skipRaw()) { kind = CLOSE; return true }
+      nm = null
+      while (pos < n) {
+        val lt = if (nextLt >= pos) nextLt else html.indexOf('<', pos)
+        if (lt != pos) {
+          start = pos; end = if (lt < 0) n else lt; pos = end; nextLt = lt
+          kind = TEXT
+          return true
+        }
+        if (lt + 1 >= n) pos = n
+        else {
+          val c = html.charAt(lt + 1)
+          if (c == '!' || c == '?') {
+            val e =
+              if (!html.startsWith("<!--", lt)) html.indexOf('>', lt + 1)
+              else { val x = html.indexOf("-->", lt + 4); if (x < 0) x else x + 2 }
+            pos = if (e < 0) n else e + 1
+          } else if (c == '/') {
+            val e = html.indexOf('>', lt + 2)
+            if (e < 0) pos = n
+            else { start = lt; end = e; pos = e + 1; kind = CLOSE; return true }
+          } else if (c.isLetter) {
+            if (openTag(lt)) return true
+          } else {
+            start = lt; end = lt + 1; pos = end
+            kind = TEXT
+            return true
+          }
+        }
+      }
+      false
+    }
+
+    private def openTag(lt: Int): Boolean = {
+      var j = lt + 1
+      var inQuote: Char = 0
+      var e = -1
+      while (j < n && e < 0) {
+        val c = html.charAt(j)
+        if (inQuote != 0) { if (c == inQuote) inQuote = 0 }
+        else if (c == '"' || c == '\'') inQuote = c
+        else if (c == '>') e = j
+        j += 1
+      }
+      if (e < 0) { pos = n; return false }
+      var k = lt + 1
+      while (html.charAt(k).isLetterOrDigit) k += 1
+      nm = html.substring(lt + 1, k).toLowerCase(java.util.Locale.ROOT)
+      start = lt; end = e; pos = e + 1
+      val b = html.charAt(e - 2) // e >= lt + 2: a letter follows the '<'
+      selfClosing = voidTags.contains(nm) || html.charAt(e - 1) == '/' &&
+        (e - lt - 2 == nm.length || b.isWhitespace || b == '"' || b == '\'')
+      raw = !selfClosing && rawTextTags.contains(nm)
+      kind = OPEN
+      true
+    }
+
+    private def closeName(): String = html.substring(start + 2, end).trim
+      .toLowerCase(java.util.Locale.ROOT).takeWhile(_.isLetterOrDigit)
+
+    /** skips the open element's raw text and its end tag; [start, end) is
+      * then that text. False when the end tag is missing: the text runs to
+      * the end of the page. */
+    def skipRaw(): Boolean = {
+      raw = false
+      val close = indexOfAsciiLower(html, "</" + nm, pos)
+      start = pos
+      end = if (close < 0) n else close
+      pos = if (close < 0) n else { val gt = html.indexOf('>', close); if (gt < 0) n else gt + 1 }
+      close >= 0
+    }
+  }
 
   /** threshold on the block score; blocks >= keep, < drop */
   final val SCORE_THRESHOLD = 10f
 
   def extract(html: String): Result = {
-    val toks = tokenize(html)
     val blocks = ArrayBuffer.empty[(String, String, Float)] // (text, path, score)
     // stack of open blocks; a synthetic root collects stray text
-    val root = new BlockAcc("root", 0, penalized = false, inTable = false)
+    val root = new BlockAcc("root", -1, penalized = false, enclosing = null)
     val stack = ArrayBuffer(root)
-    val tagPath = ArrayBuffer.empty[String]
+    val open = new Array[Int](blockTags.size) // open blocks per block tag
     var dropDepth = 0
     var linkDepth = 0
 
-    def scoreAndEmit(b: BlockAcc): Unit = {
-      val raw = b.text.toString
-      val text = normalizeWs(raw)
-      if (text.nonEmpty) {
-        val chars = text.length
-        val density = chars.toFloat / (1 + b.tagCount)
-        val linkDensity = if (chars == 0) 0f else math.min(1f, b.linkChars.toFloat / chars)
+    def prose(c: BufferedItem): Unit =
+      if (c.text.nonEmpty) {
+        val chars = c.text.length
         val prior =
-          if (b.penalized) 0.25f
-          else if (boostTags.contains(b.tag)) 2.0f
+          if (c.penalized) 0.25f
+          else if (boostTags.contains(c.tag)) 2.0f
           else 1.0f
-        val score = density * prior * (1.0f - 0.75f * linkDensity)
-        blocks += ((text, b.tag, score))
+        val density = chars.toFloat / (1 + c.tagCount)
+        val score = density * prior * (1.0f - 0.75f * linkShare(c.linkChars, chars))
+        blocks += ((c.text, c.tag, score))
       }
-    }
-
-    def nearestTable(): BlockAcc = {
-      var i = stack.length - 1
-      while (i >= 0 && stack(i).tag != "table") i -= 1
-      if (i >= 0) stack(i) else null
-    }
 
     def emitTable(t: BlockAcc): Unit = {
       val own = normalizeWs(t.text.toString) // caption / stray table text
@@ -363,9 +417,7 @@ object HtmlExtract {
         else t.tableRows.map(_.filter(_.fullText.nonEmpty)).filter(_.nonEmpty)
       val cells = rows.flatten
       val totalCellChars = cells.iterator.map(_.fullText.length).sum
-      val isData = cells.length >= MIN_DATA_CELLS && rows.length >= 2 &&
-        totalCellChars.toFloat / cells.length <= MAX_AVG_CELL_CHARS
-      if (isData) {
+      if (isDataTable(cells.length, rows.length, totalCellChars)) {
         // one row-wise block for the whole table: " | " between cells,
         // '\n' between rows; cell text is the cell's FULL subtree text so
         // <td><div>42</div></td> markup keeps its cells; scored by
@@ -379,10 +431,7 @@ object HtmlExtract {
         // rendered string: " | " separators and newlines would dilute a
         // short-cell link grid (calendar/pagination) below the majority
         // rule; fullLinkChars covers links wrapped in blocks inside cells
-        val contentChars = totalCellChars + own.length
-        val linkDensity =
-          if (contentChars == 0) 0f
-          else math.min(1f, t.fullLinkChars.toFloat / contentChars)
+        val linkDensity = linkShare(t.fullLinkChars, totalCellChars + own.length)
         // a table that passed the structural data gate gets the same
         // content prior as boostTags: the per-row divisor already charges
         // its structure, and without the prior a small 3-row table scores
@@ -395,31 +444,22 @@ object HtmlExtract {
         if (text.nonEmpty) blocks += ((text, "table", score)) // threshold-filtered with all blocks
       } else {
         // layout table: replay EVERY buffered block (cells and the blocks
-        // nested inside them) through the round-3 prose scoring, in close
-        // order — byte-identical to the pre-buffering behavior
-        if (t.buffered != null) t.buffered.foreach { c =>
-          if (c.text.nonEmpty) {
-            val density = c.text.length.toFloat / (1 + c.tagCount)
-            val linkDensity = math.min(1f, c.linkChars.toFloat / math.max(c.text.length, 1))
-            val prior =
-              if (c.penalized) 0.25f
-              else if (boostTags.contains(c.tag)) 2.0f
-              else 1.0f
-            blocks += ((c.text, c.tag, density * prior * (1.0f - 0.75f * linkDensity)))
-          }
-        }
-        scoreAndEmit(t)
+        // nested inside them) through the prose score, in close order —
+        // byte-identical to the pre-buffering behavior
+        if (t.buffered != null) t.buffered.foreach(prose)
+        prose(t.item)
       }
     }
 
     def closeBlock(): Unit = {
       val b = stack.remove(stack.length - 1)
-      val table = nearestTable()
-      val parent = if (stack.nonEmpty) stack.last else null
+      open(b.tagIdx) -= 1
+      val table = b.table // a table's own case below does not read it
+      val parent = stack.last
       // subtree text flows upward inside tables (space-joined: cells render
       // on one row line; normalizeWs collapses the seams)
       def flowFull(): Unit =
-        if (parent != null && parent.inTable) {
+        if (parent.table != null) {
           if (b.full.nonEmpty) {
             if (parent.full.nonEmpty) parent.full.append(' ')
             parent.full.append(b.full)
@@ -431,8 +471,7 @@ object HtmlExtract {
           // buffer the cell on the enclosing table instead of emitting;
           // fullText (whole subtree) feeds the data render, text (direct)
           // the layout replay
-          val item = BufferedItem(normalizeWs(b.text.toString), normalizeWs(b.full.toString),
-            b.tag, b.tagCount, b.linkChars, b.penalized)
+          val item = b.item
           table.currentRow() += item
           table.buffer(item)
           flowFull()
@@ -452,36 +491,40 @@ object HtmlExtract {
         case _ if table != null =>
           // block nested inside a table (td > div/p/...): buffer for the
           // layout replay; its text reaches the cell via flowFull
-          table.buffer(BufferedItem(normalizeWs(b.text.toString), normalizeWs(b.full.toString),
-            b.tag, b.tagCount, b.linkChars, b.penalized))
+          table.buffer(b.item)
           flowFull()
         case _ =>
-          scoreAndEmit(b)
+          prose(b.item)
       }
-      if (stack.nonEmpty) stack.last.tagCount += b.tagCount + 1
+      parent.tagCount += b.tagCount + 1
     }
 
-    toks.foreach {
-      case TText(t) =>
+    val cur = new Cursor(html)
+    while (cur.next()) cur.kind match {
+      case TEXT =>
         if (dropDepth == 0) {
-          val decoded = decodeEntities(t)
-          stack.last.text.append(decoded)
-          if (stack.last.inTable) stack.last.full.append(decoded)
+          val decoded = decodeEntities(cur.text)
+          val top = stack.last
+          top.text.append(decoded)
+          if (top.table != null) top.full.append(decoded)
           if (linkDepth > 0) {
             val n = normalizeWs(decoded).length
-            stack.last.linkChars += n
-            if (stack.last.inTable) stack.last.fullLinkChars += n
+            top.linkChars += n
+            if (top.table != null) top.fullLinkChars += n
           }
         }
-      case TOpen(name, selfClosing, hint) =>
-        if (dropTags.contains(name) && !selfClosing && !voidTags.contains(name)) dropDepth += 1
+      case OPEN =>
+        val name = cur.name
+        val selfClosing = cur.selfClosing
+        if (dropTags.contains(name) && !selfClosing) dropDepth += 1
         else if (dropDepth == 0) {
           if (name == "a" && !selfClosing) linkDepth += 1
           if (name == "br") {
             stack.last.text.append('\n')
-            if (stack.last.inTable) stack.last.full.append('\n')
+            if (stack.last.table != null) stack.last.full.append('\n')
           }
-          if (blockTags.contains(name) && !selfClosing) {
+          val tagIdx = blockTags.getOrElse(name, -1)
+          if (tagIdx >= 0 && !selfClosing) {
             // HTML5 implied end tags: an open <p> closes on ANY block-level
             // start (tag-soup pages rarely close their p's — without this a
             // page's first <p> swallows every later tag into its density
@@ -494,28 +537,29 @@ object HtmlExtract {
                   (stack.last.tag == "td" || stack.last.tag == "th")) ||
                 (name == "tr" && stack.last.tag == "tr"))) closeBlock()
             val penalized = stack.last.penalized || penaltyTags.contains(name) ||
-              hintPenalized(hint)
-            stack += new BlockAcc(name, stack.length, penalized,
-              inTable = name == "table" || stack.last.inTable)
+              hintPenalized(classIdHint(cur.attrs))
+            stack += new BlockAcc(name, tagIdx, penalized, stack.last.table)
+            open(tagIdx) += 1
           } else if (!selfClosing) {
             stack.last.tagCount += 1
           }
         }
-      case TClose(name) =>
+      case CLOSE =>
+        val name = cur.name
         if (dropTags.contains(name)) { if (dropDepth > 0) dropDepth -= 1 }
         else if (dropDepth == 0) {
           if (name == "a") { if (linkDepth > 0) linkDepth -= 1 }
-          if (blockTags.contains(name)) {
-            // close up to the matching open block (tolerates misnesting)
+          val tagIdx = blockTags.getOrElse(name, -1)
+          // close up to the matching open block (tolerates misnesting); a
+          // close tag with no open match costs no stack walk
+          if (tagIdx >= 0 && open(tagIdx) > 0) {
             val idx = stack.lastIndexWhere(_.tag == name)
-            if (idx > 0) {
-              while (stack.length > idx) closeBlock()
-            }
+            while (stack.length > idx) closeBlock()
           }
         }
     }
     while (stack.length > 1) closeBlock()
-    scoreAndEmit(root)
+    prose(root.item)
 
     val kept = blocks.filter(_._3 >= SCORE_THRESHOLD)
     val sb = new StringBuilder
@@ -528,7 +572,6 @@ object HtmlExtract {
     Result(sb.toString, spans.result())
   }
 
-  /** collapse whitespace runs to single spaces, preserving explicit newlines */
   /** one outlink: raw (entity-decoded) href, whitespace-normalized
     * entity-decoded anchor text, and whether rel contains nofollow */
   final case class Link(href: String, anchor: String, nofollow: Boolean)
@@ -547,9 +590,16 @@ object HtmlExtract {
     res
   }
 
+  /** whether the `rel` attribute lists `token` (case-folded, space or
+    * comma separated) */
+  private def relHas(attrs: String, token: String): Boolean =
+    attrValue(attrs, "rel").exists(
+      _.toLowerCase(java.util.Locale.ROOT).split("[\\s,]+").contains(token))
+
   /** outlink extraction — every `<a href=...>` with its anchor text, in
-    * document order. Same tolerance contract as [[tokenize]] (comments,
-    * doctype, quote-aware tag ends, raw-text skip) plus the anchor rules:
+    * document order, read through the same [[Cursor]] as [[extract]]
+    * (comments, doctype, quote-aware tag ends, raw-text skip) plus the
+    * anchor rules:
     *
     *  - anchors never nest (HTML spec: an `<a>` start tag implicitly
     *    closes an open one) — a second `<a>` emits the first;
@@ -567,8 +617,6 @@ object HtmlExtract {
     * this is north_rule surface. */
   def extractLinks(html: String): Vector[Link] = {
     val out = Vector.newBuilder[Link]
-    var i = 0
-    val n = html.length
     var inA = false
     var href = ""
     var nofollow = false
@@ -578,74 +626,21 @@ object HtmlExtract {
         out += Link(href, normalizeWs(decodeEntities(anchor.toString)), nofollow)
       inA = false; href = ""; nofollow = false; anchor.setLength(0)
     }
-    def relNofollow(inner: String): Boolean =
-      attrValue(inner, "rel").exists(
-        _.toLowerCase(java.util.Locale.ROOT).split("[\\s,]+").contains("nofollow"))
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) {
-        if (inA && i < n) anchor.append(html.substring(i))
-        i = n
-      } else {
-        if (inA && lt > i) anchor.append(html.substring(i, lt))
-        if (lt + 1 >= n) i = n
-        else if (html.startsWith("<!--", lt)) {
-          val end = html.indexOf("-->", lt + 4)
-          i = if (end < 0) n else end + 3
-        } else if (html.charAt(lt + 1) == '!' || html.charAt(lt + 1) == '?') {
-          val end = html.indexOf('>', lt + 1)
-          i = if (end < 0) n else end + 1
-        } else if (html.charAt(lt + 1) == '/') {
-          val end = html.indexOf('>', lt + 2)
-          if (end < 0) i = n
-          else {
-            val name = html.substring(lt + 2, end).trim
-              .toLowerCase(java.util.Locale.ROOT).takeWhile(_.isLetterOrDigit)
-            if (name == "a") close()
-            i = end + 1
+    val cur = new Cursor(html)
+    while (cur.next()) cur.kind match {
+      case TEXT => if (inA) anchor.append(cur.text)
+      case OPEN =>
+        if (cur.name == "a") {
+          close() // implicit close: anchors never nest
+          val attrs = cur.attrs
+          val h = attrValue(attrs, "href").map(decodeEntities).getOrElse("")
+          if (cur.selfClosing) {
+            if (h.nonEmpty) out += Link(h, "", relHas(attrs, "nofollow"))
+          } else {
+            inA = true; href = h; nofollow = relHas(attrs, "nofollow")
           }
-        } else if (html.charAt(lt + 1).isLetter) {
-          var j = lt + 1
-          var inQuote: Char = 0
-          var end = -1
-          while (j < n && end < 0) {
-            val c = html.charAt(j)
-            if (inQuote != 0) { if (c == inQuote) inQuote = 0 }
-            else if (c == '"' || c == '\'') inQuote = c
-            else if (c == '>') end = j
-            j += 1
-          }
-          if (end < 0) i = n
-          else {
-            val inner = html.substring(lt + 1, end)
-            val name = inner.takeWhile(c => c.isLetterOrDigit)
-              .toLowerCase(java.util.Locale.ROOT)
-            val selfClosing = isSelfClosingInner(inner, name) || voidTags.contains(name)
-            if (name == "a") {
-              close() // implicit close: anchors never nest
-              val attrs = inner.drop(name.length)
-              val h = attrValue(attrs, "href").map(decodeEntities).getOrElse("")
-              if (selfClosing) {
-                if (h.nonEmpty) out += Link(h, "", relNofollow(attrs))
-              } else {
-                inA = true; href = h; nofollow = relNofollow(attrs)
-              }
-            }
-            i = end + 1
-            if (!selfClosing && rawTextTags.contains(name)) {
-              val closeIdx = indexOfAsciiLower(html, s"</$name", i)
-              if (closeIdx < 0) i = n
-              else {
-                val gt = html.indexOf('>', closeIdx)
-                i = if (gt < 0) n else gt + 1
-              }
-            }
-          }
-        } else {
-          if (inA) anchor.append('<')
-          i = lt + 1
         }
-      }
+      case CLOSE => if (cur.name == "a") close()
     }
     close()
     out.result()
@@ -665,77 +660,37 @@ object HtmlExtract {
     var canonical: String = null
     var noindex = false
     var nofollow = false
-    var i = 0
-    val n = html.length
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) i = n
-      else if (lt + 1 >= n) i = n
-      else if (html.startsWith("<!--", lt)) {
-        val end = html.indexOf("-->", lt + 4)
-        i = if (end < 0) n else end + 3
-      } else if (html.charAt(lt + 1) == '!' || html.charAt(lt + 1) == '?' ||
-          html.charAt(lt + 1) == '/') {
-        val end = html.indexOf('>', lt + 1)
-        i = if (end < 0) n else end + 1
-      } else if (html.charAt(lt + 1).isLetter) {
-        var j = lt + 1
-        var inQuote: Char = 0
-        var end = -1
-        while (j < n && end < 0) {
-          val c = html.charAt(j)
-          if (inQuote != 0) { if (c == inQuote) inQuote = 0 }
-          else if (c == '"' || c == '\'') inQuote = c
-          else if (c == '>') end = j
-          j += 1
+    val cur = new Cursor(html)
+    while (cur.next()) if (cur.kind == OPEN) cur.name match {
+      case "title" if !cur.selfClosing =>
+        // rcdata: raw text to the matching close tag, tags-as-text.
+        // EVERY title skips as rcdata (a second <title>, e.g. inside
+        // <svg>, must not leak its content back into live markup
+        // where a decoy <link rel=canonical> would be honored) —
+        // only the first one's text is captured
+        cur.skipRaw()
+        if (title == null) title = normalizeWs(decodeEntities(cur.text))
+      case "link" if canonical == null =>
+        val attrs = cur.attrs
+        if (relHas(attrs, "canonical"))
+          attrValue(attrs, "href").map(decodeEntities).filter(_.nonEmpty)
+            .foreach(canonical = _)
+      case "meta" =>
+        val attrs = cur.attrs
+        val isRobots = attrValue(attrs, "name").exists(
+          _.trim.equalsIgnoreCase("robots"))
+        if (isRobots) attrValue(attrs, "content").foreach { c =>
+          val toks = c.toLowerCase(java.util.Locale.ROOT).split("[\\s,]+")
+          if (toks.contains("noindex") || toks.contains("none")) noindex = true
+          if (toks.contains("nofollow") || toks.contains("none")) nofollow = true
         }
-        if (end < 0) i = n
-        else {
-          val inner = html.substring(lt + 1, end)
-          val name = inner.takeWhile(_.isLetterOrDigit).toLowerCase(java.util.Locale.ROOT)
-          val selfClosing = isSelfClosingInner(inner, name) || voidTags.contains(name)
-          val attrs = inner.drop(name.length)
-          i = end + 1
-          name match {
-            case "title" if !selfClosing =>
-              // rcdata: raw text to the matching close tag, tags-as-text.
-              // EVERY title skips as rcdata (a second <title>, e.g. inside
-              // <svg>, must not leak its content back into live markup
-              // where a decoy <link rel=canonical> would be honored) —
-              // only the first one's text is captured
-              val closeIdx = indexOfAsciiLower(html, "</title", i)
-              val stop = if (closeIdx < 0) n else closeIdx
-              if (title == null)
-                title = normalizeWs(decodeEntities(html.substring(i, stop)))
-              i = if (closeIdx < 0) n
-              else { val gt = html.indexOf('>', closeIdx); if (gt < 0) n else gt + 1 }
-            case "link" if canonical == null =>
-              val isCanonical = attrValue(attrs, "rel").exists(
-                _.toLowerCase(java.util.Locale.ROOT).split("[\\s,]+").contains("canonical"))
-              if (isCanonical)
-                attrValue(attrs, "href").map(decodeEntities).filter(_.nonEmpty)
-                  .foreach(canonical = _)
-            case "meta" =>
-              val isRobots = attrValue(attrs, "name").exists(
-                _.trim.equalsIgnoreCase("robots"))
-              if (isRobots) attrValue(attrs, "content").foreach { c =>
-                val toks = c.toLowerCase(java.util.Locale.ROOT).split("[\\s,]+")
-                if (toks.contains("noindex") || toks.contains("none")) noindex = true
-                if (toks.contains("nofollow") || toks.contains("none")) nofollow = true
-              }
-            case nm if !selfClosing && rawTextTags.contains(nm) =>
-              val closeIdx = indexOfAsciiLower(html, s"</$nm", i)
-              i = if (closeIdx < 0) n
-              else { val gt = html.indexOf('>', closeIdx); if (gt < 0) n else gt + 1 }
-            case _ => ()
-          }
-        }
-      } else i = lt + 1
+      case _ => ()
     }
     PageMeta(if (title == null) "" else title,
       if (canonical == null) "" else canonical, noindex, nofollow)
   }
 
+  /** collapse whitespace runs to single spaces, preserving explicit newlines */
   def normalizeWs(s: String): String = {
     val sb = new StringBuilder(s.length)
     var i = 0
@@ -778,7 +733,7 @@ object HtmlExtract {
     * pipeline (table-QA / table-pretraining sets are built from exactly
     * this shape), complementing [[extract]]'s prose render.
     *
-    * Reuses [[tokenize]] and applies the SAME data-vs-layout gate as the
+    * Reads the page through the same [[Cursor]] and applies the SAME data-vs-layout gate as the
     * prose path ([[MIN_DATA_CELLS]] non-empty cells in >= 2 rows, average
     * non-empty cell <= [[MAX_AVG_CELL_CHARS]] chars) plus the same two
     * rejections the prose path resolves via priors: majority-link tables
@@ -832,12 +787,8 @@ object HtmlExtract {
       val nonEmpty = rows.flatten.filter(_._2.nonEmpty)
       val cellChars = nonEmpty.iterator.map(_._2.length).sum
       val cap = normalizeWs(t.caption.toString)
-      val contentChars = cellChars + cap.length
-      val linkDensity =
-        if (contentChars == 0) 0f else math.min(1f, t.linkChars.toFloat / contentChars)
-      val isData = nonEmpty.length >= MIN_DATA_CELLS && rows.length >= 2 &&
-        cellChars.toFloat / nonEmpty.length <= MAX_AVG_CELL_CHARS
-      if (isData && !t.penalized && linkDensity <= 0.5f)
+      if (isDataTable(nonEmpty.length, rows.length, cellChars) && !t.penalized &&
+          linkShare(t.linkChars, cellChars + cap.length) <= 0.5f)
         out += ExtractedTable(t.idx, cap,
           rows.iterator.zipWithIndex.map { case (r, ri) =>
             TableRowCells(ri, r.nonEmpty && r.forall(_._1), r.map(_._2).toVector)
@@ -859,18 +810,21 @@ object HtmlExtract {
       }
     }
 
-    tokenize(html).foreach {
-      case TText(t) =>
+    val cur = new Cursor(html)
+    while (cur.next()) cur.kind match {
+      case TEXT =>
         if (dropDepth == 0 && tstack.nonEmpty) {
           val top = tstack.last
-          val decoded = decodeEntities(t)
+          val decoded = decodeEntities(cur.text)
           if (top.captionDepth > 0) top.caption.append(decoded)
           else if (top.cell != null) top.cell.append(decoded)
           if (linkDepth > 0 && (top.captionDepth > 0 || top.cell != null))
             top.linkChars += normalizeWs(decoded).length
         }
-      case TOpen(name, selfClosing, _) =>
-        if (dropTags.contains(name) && !selfClosing && !voidTags.contains(name)) dropDepth += 1
+      case OPEN =>
+        val name = cur.name
+        val selfClosing = cur.selfClosing
+        if (dropTags.contains(name) && !selfClosing) dropDepth += 1
         else if (dropDepth == 0) {
           if (name == "a" && !selfClosing) linkDepth += 1
           else if (penaltyTags.contains(name) && !selfClosing) penaltyDepth += 1
@@ -905,7 +859,8 @@ object HtmlExtract {
             }
           }
         }
-      case TClose(name) =>
+      case CLOSE =>
+        val name = cur.name
         if (dropTags.contains(name)) { if (dropDepth > 0) dropDepth -= 1 }
         else if (dropDepth == 0) {
           if (name == "a") { if (linkDepth > 0) linkDepth -= 1 }

@@ -447,9 +447,6 @@ object Lex {
   def getDictVal(dict: Dict, key: String, default: Long): Long =
     dict.get(key).map(v => strictStoul(v.raw)).getOrElse(default)
 
-  def getDictValF(dict: Dict, key: String, default: Float): Float =
-    dict.get(key).map(v => stof(v.raw)).getOrElse(default)
-
   /** big-endian packed bytes -> uint (common.cc:789-795) */
   def string2num(s: String): Long = {
     if (s.isEmpty) err("string2num: string is empty")

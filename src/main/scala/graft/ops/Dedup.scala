@@ -1741,8 +1741,11 @@ object Dedup {
 
   /** q46 tokenization twin of `split(lower(trim(coalesce(text,''))),
     * '\\s+')`: SQL trim strips 0x20 only; split keeps edge empties
-    * (limit -1). */
-  private def spanToks(text0: String): Array[String] = {
+    * (limit -1). Lowercasing is pinned to `Locale.ROOT` on purpose: the
+    * JVM default locale would make the tokens depend on the host (a
+    * Turkish locale lowers 'I' to dotless 'ı'); OpsSpec checks the tokens
+    * against the SQL expression row by row. */
+  private[graft] def spanToks(text0: String): Array[String] = {
     val t0 = if (text0 == null) "" else text0
     var b = 0
     var e = t0.length

@@ -1627,6 +1627,11 @@ object TextOps {
     * length (empty/NULL-text docs kept at dl=0 — they are part of N and
     * avgdl, exactly as the scan path counts them).
     *
+    * Input contract: `doc_id` is unique across `documents`' rows. The
+    * build does not check it: a doc_id on two rows yields two postings per
+    * shared term (and two docLens rows), which downstream scoring joins
+    * count twice — deduplicate upstream when the source can repeat ids.
+    *
     * Scale shape: ONE shuffle-free typed pass — tf is counted in-doc
     * (each (term, doc_id) pair originates in exactly one document row,
     * so the per-doc counts ARE the postings; no explode, no aggregate);

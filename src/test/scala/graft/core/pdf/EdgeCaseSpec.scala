@@ -180,6 +180,25 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(out.status.startsWith("err:"))
   }
 
+  test("adversarial html: 1 MiB of deep nesting or stray close tags extracts ok in bounded time") {
+    // one page must not hold its task hostage: a per-tag walk of the
+    // open-element stack makes both inputs quadratic in nesting depth
+    // (tens of seconds at 1 MiB), so depth must cost nothing per tag
+    val mib = 1 << 20
+    def rep(unit: String, bytes: Int): String = unit * (bytes / unit.length)
+    Seq(
+      "unclosed <div><p>" -> rep("<div><p>x ", mib),
+      "stray </p> under 20k open <div>s" -> (rep("<div>", 20000 * 5) + rep("</p>", mib))
+    ).foreach { case (name, html) =>
+      val t0 = System.nanoTime()
+      val out = graft.pipeline.ExtractKernel.extractOne(graft.pipeline.PageRow(
+        "u", new java.sql.Timestamp(0), html.getBytes(java.nio.charset.StandardCharsets.UTF_8), "", "en"))
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(out.status == "ok", name)
+      assert(secs < 2.0, f"$name took $secs%.2f s")
+    }
+  }
+
   test("bad pdf: xref offset beyond buffer throws cleanly") {
     intercept[PdfError] {
       PdfExtract.pdf2txt(bytes("%PDF-1.4\nstartxref\n99999\n%%EOF\n"))

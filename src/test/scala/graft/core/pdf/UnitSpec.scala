@@ -199,15 +199,22 @@ class UnitSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(20260823L)
     val atoms = Seq("<div>", "</div>", "<p>", "</p", "<a href='x", "&amp;", "&#xZZ;",
       "<!-- c", "-->", "<script>", "</script>", "<", ">", "<br/>", "</html>",
-      "<table><tr><td>", "</b o g u s>", "<p class=\"a\"b>", "&#65")
+      "<table><tr><td>", "</b o g u s>", "<p class=\"a\"b>", "&#65",
+      "<title>", "</title>", "<meta name=robots content=\"noindex, nofollow\">",
+      "<link rel=canonical href=\"/c?a=1&amp;b\">", "<a href=\"/n\" rel=nofollow>", "</a>",
+      "<a href='/s'/>", "<SCRIPT>", "</SCRIPT>", "<div class=\"unterminated>")
     (0 until 500).foreach { _ =>
       val soup = (0 to 5 + rnd.nextInt(40)).map { _ =>
         if (rnd.nextBoolean()) atoms(rnd.nextInt(atoms.length))
         else (0 to rnd.nextInt(6)).map(_ => ('a' + rnd.nextInt(26)).toChar.toString * (1 + rnd.nextInt(5))).mkString(" ")
       }.mkString(" ")
-      val r1 = HtmlExtract.extract(soup) // must not throw
+      // every surface reads the same scanner: none may throw, all deterministic
+      val r1 = HtmlExtract.extract(soup)
       val r2 = HtmlExtract.extract(soup)
-      assert(r1.text == r2.text) // deterministic
+      assert(r1 == r2)
+      assert(HtmlExtract.extractTables(soup) == HtmlExtract.extractTables(soup))
+      assert(HtmlExtract.extractLinks(soup) == HtmlExtract.extractLinks(soup))
+      assert(HtmlExtract.pageMeta(soup) == HtmlExtract.pageMeta(soup))
     }
   }
 

@@ -2761,6 +2761,23 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("spanToks: tokens equal Spark's split(lower(trim(coalesce(text, ''))), '\\s+', -1)") {
+    // the typed span kernels tokenize with spanToks instead of the SQL
+    // expression; the hash parity above only holds if the tokens match:
+    // Unicode case mapping (dotted I lowers to two chars, final sigma),
+    // NBSP (not \s, and SQL trim keeps it), tabs/newlines (\s, but not
+    // trimmed), edge spaces, empty and null text
+    val samples: Seq[Option[String]] = Seq("İSTANBUL İzmir", "STRASSE ß Maß", "ΟΔΟΣ Σ ΣΑΣ",
+      "a\u00a0b \u00a0", "\ttab\tsep\t", " \n lead and trail \n ", "  two  spaces  ",
+      "", " ", "\t", "MiXeD CaSe Ǆ ǅ").map(Some(_)) :+ None
+    val viaSpark = samples.zipWithIndex.toDF("s", "id")
+      .select(col("id"), split(lower(trim(coalesce(col("s"), lit("")))), "\\s+", -1).as("t"))
+      .collect().map(r => r.getInt(0) -> r.getSeq[String](1)).toMap
+    samples.zipWithIndex.foreach { case (s, i) =>
+      assert(Dedup.spanToks(s.orNull).toSeq == viaSpark(i), s"spanToks diverges on $s")
+    }
+  }
+
   test("decontaminateSpans: covered windows cut, clean docs pass through, overlaps merge") {
     // 9 bench tokens => TWO 8-gram windows; embedding them in a doc makes
     // two OVERLAPPING bad windows whose covered union is 9 tokens
